@@ -189,3 +189,33 @@ def test_blocking_quality_of_pipeline_key(sdfs):
     # keeps ≥ that fraction of true pairs together
     assert r["pc_micro"] >= 990_000, r.asDict()
     assert r["rr_micro"] >= 500_000, r.asDict()
+
+
+def test_flagship_content_pin_sf0001(spark):
+    """The flagship's full output at sf0.001 (``__spark_entry__.entry``),
+    pinned by content.
+
+    Float policy: the digest is order-insensitive, over
+    (doc_id, start, end, entity_id, believe) joined by \\x1f, one line per
+    row, lines sorted. ``believe`` is rounded to 6 decimals and formatted
+    ``f"{v:.6f}"`` (``tools/check_oracles.norm_cell``). Rounding absorbs
+    the last-digit drift of reordered float sums in the context pool and
+    the cosines; a value within that drift of a rounding boundary, a
+    changed top-1 winner or any larger change moves the digest.
+    """
+    import hashlib
+
+    import __spark_entry__ as entrymod
+
+    links = entrymod.entry(spark)
+    rows = links.select("doc_id", "start", "end", "entity_id", "believe").collect()
+    lines = sorted(
+        "\x1f".join(
+            (str(r["doc_id"]), str(r["start"]), str(r["end"]), str(r["entity_id"]),
+             f"{round(r['believe'], 6):.6f}")
+        )
+        for r in rows
+    )
+    assert len(lines) == 27008
+    digest = hashlib.md5("\n".join(lines).encode()).hexdigest()
+    assert digest == "0178a5c52e682f85acc3895c47e260a9"

@@ -48,7 +48,12 @@ def test_candidate_join_is_broadcast(spark):
     cands = SC.candidate_table(mentions, ma, egm, emb)
     plan = _plan(cands)
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan  # dictionary explosion must not SMJ
+    # dictionary explosion must not SMJ
+    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+    # one Arrow pass explodes and scores the candidates, no per-row Python
+    assert plan.count("MapInArrow") == 1
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert marker not in plan
 
 
 def test_scoring_has_no_python_in_hot_path(spark):
@@ -258,18 +263,21 @@ def test_curation_held_release_frees_all_storage(spark):
 
 def test_linking_pipeline_ascii_python_is_one_arrow_scan(spark):
     """The fully-oracled ASCII flagship (detect → resolve → context →
-    tokenize → mean-pool cosine → fuse → gate → top-1): the ONLY Python in
-    the plan is the single Arrow-batched n-gram span scan of join-path
-    detection — every scoring/pooling/gating stage is JVM-side — and the
-    dictionary/embedding joins broadcast (the candidate explosion must
-    never sort-merge on the Zipf-skewed surface key)."""
+    tokenize → mean-pool cosine → fuse → gate → top-1): the Python in the
+    plan is three Arrow passes — the n-gram span scan of join-path
+    detection, the context-word pool (one row per mention) and the
+    candidate explosion with its word cosine (one row per mention in,
+    candidate rows out). Fusion and gating are JVM-side, no Python runs
+    per row, and the dictionary joins broadcast (the candidate explosion
+    must never sort-merge on the Zipf-skewed surface key)."""
     from xlink_spark.driver_queries import q_linking_pipeline_ascii
 
     plan = _plan(q_linking_pipeline_ascii(spark, "/root/testdata/sf0.001"))
-    assert plan.count("MapInPandas") == 1  # the detection span scan, only
+    assert plan.count("MapInPandas") == 1  # the detection span scan
+    assert plan.count("MapInArrow") == 2  # context pool, candidate kernel
     for marker in ("BatchEvalPython", "ArrowEvalPython"):
         assert marker not in plan
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
 
 

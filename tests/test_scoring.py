@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from xlink_spark.config import PredictorConfig
-from xlink_spark.functions.vectors import cosine, mean_pool_expr
+from xlink_spark.functions.vectors import cosine, pool_unit
 from xlink_spark.operators import scoring as SC
 
 
@@ -22,14 +22,67 @@ def test_cosine_expr(spark):
     assert got == [1.0, 0.0, 0.0]
 
 
-def test_mean_pool_expr(spark):
-    df = spark.createDataFrame(
-        [([[1.0, 2.0], [3.0, 4.0]],), ([],)],
-        "vecs array<array<double>>",
+def test_pool_unit_kernel():
+    """The context-pool kernel: unit-normalized sum of in-vocabulary word
+    vectors; no in-vocabulary word, an empty or null context, or vectors
+    summing to zero give null."""
+    import numpy as np
+    import pyarrow as pa
+
+    keys = pa.array(["a", "b", "neg_a"])
+    mat = np.array([[1.0, 2.0], [3.0, 4.0], [-1.0, -2.0]])
+    words = pa.array([["a", "b"], [], None, ["zz"], ["a", "zz", "neg_a"], ["zz", "b"]])
+    got = pool_unit(words, keys, mat).to_pylist()
+    n = math.sqrt(13)  # mean [2, 3] (= sum [4, 6] / 2), unit-normalized
+    assert got[0] == pytest.approx([2 / n, 3 / n])
+    assert got[1:5] == [None, None, None, None]
+    assert got[5] == pytest.approx([0.6, 0.8])  # OOV words are skipped
+
+
+def test_candidate_kernel_edge_cases(spark):
+    """candidate_table's Arrow kernel against the reference ``cosine``:
+    duplicate (mention, entity) dictionary rows keep their multiplicity, a
+    zero-norm entity scores 0, a candidate without an embedding is
+    dropped, an out-of-vocabulary-only context gives a null ctx_vec and
+    word_sim 0, and a mention without candidates emits no rows."""
+    mentions = spark.createDataFrame(
+        [("d1", 0, 2, "aa", "ma"), ("d2", 0, 2, "cc", "ma"), ("d3", 0, 2, "bb", "ma")],
+        "doc_id string, start int, end int, surface string, parse_from string",
     )
-    got = [r["m"] for r in df.select(mean_pool_expr("vecs").alias("m")).collect()]
-    assert got[0] == [2.0, 3.0]
-    assert got[1] is None
+    docs = spark.createDataFrame(
+        [("d1", "aa foo bar"), ("d2", "cc zzz"), ("d3", "bb foo")],
+        "doc_id string, text string",
+    )
+    wemb = spark.createDataFrame(
+        [("foo", [1.0, 0.0, 0.0]), ("bar", [0.0, 2.0, 1.0])], "key string, vec array<float>"
+    )
+    emb = spark.createDataFrame(
+        [("e1", [1.0, 1.0, 0.25]), ("e2", [0.0, 0.0, 0.0])], "key string, vec array<float>"
+    )
+    ma = spark.createDataFrame(
+        [("aa", "e1", 1), ("aa", "e1", 1), ("aa", "e2", 1), ("aa", "e3", 1), ("cc", "e1", 1)],
+        "mention string, entity_id string, cnt long",
+    )
+    egm = spark.createDataFrame(
+        [("aa", "e1", 0.5), ("aa", "e2", 0.3), ("aa", "e3", 0.2), ("cc", "e1", 1.0)],
+        "mention string, entity_id string, p double",
+    )
+    ctx = SC.context_word_vector(SC.attach_context(mentions, docs), wemb)
+    assert {r["surface"]: r["ctx_vec"] is None for r in ctx.collect()} == {
+        "aa": False, "cc": True, "bb": False
+    }
+    got = sorted(
+        (r["surface"], r["entity_id"], r["p"], r["ctx_word_sim"])
+        for r in SC.candidate_table(ctx, ma, egm, emb).collect()
+    )
+    ref = spark.createDataFrame(
+        [([1.0, 1.0, 0.25], [1.0, 2.0, 1.0])], "a array<double>, b array<double>"
+    ).select(cosine("a", "b").alias("c")).first()["c"]
+    assert [g[:3] for g in got] == [
+        ("aa", "e1", 0.5), ("aa", "e1", 0.5), ("aa", "e2", 0.3), ("cc", "e1", 1.0)
+    ]
+    assert got[0][3] == got[1][3] == pytest.approx(ref, rel=1e-12, abs=0)
+    assert got[2][3] == 0.0 and got[3][3] == 0.0
 
 
 def test_attach_context_window_bounds(spark):
@@ -171,6 +224,26 @@ def test_top1_deterministic_tiebreak(spark):
     lp = spark.createDataFrame([("mm", 0.5)], "mention string, link_prob double")
     got = SC.score_has_prob(cands, lp).collect()
     assert [r["entity_id"] for r in got] == ["e1"]  # ascending id wins ties
+    # the same through the Arrow kernel: identical entity vectors with the
+    # same p must give bit-equal sims, so the id decides
+    mentions = spark.createDataFrame(
+        [("d", 0, 2, "mm", "ma", [0.3, 0.7, 0.11])],
+        "doc_id string, start int, end int, surface string, parse_from string,"
+        "ctx_vec array<double>",
+    )
+    vec = [0.31, 0.69, 0.12]
+    emb = spark.createDataFrame(
+        [("e2", vec), ("e1", vec), ("e3", [0.1, 0.2, 0.3])], "key string, vec array<double>"
+    )
+    egm = spark.createDataFrame(
+        [("mm", "e2", 0.4), ("mm", "e1", 0.4), ("mm", "e3", 0.2)],
+        "mention string, entity_id string, p double",
+    )
+    cands = SC.candidate_table(mentions, egm.select("mention", "entity_id"), egm, emb)
+    sims = {r["entity_id"]: r["ctx_word_sim"] for r in cands.collect()}
+    assert sims["e1"] == sims["e2"]
+    got = SC.score_has_prob(cands.withColumn("ctx_ent_sim", F.lit(1.0)), lp).collect()
+    assert [r["entity_id"] for r in got] == ["e1"]
 
 
 def test_no_prob_gates(spark):

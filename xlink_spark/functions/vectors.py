@@ -1,20 +1,38 @@
-"""Vector math — native column expressions first, Arrow-batched UDFs second.
+"""Vector math: JVM column expressions, and numpy kernels over Arrow batches.
 
 The reference computes cosine similarity with numpy inside per-document
-Python loops (xlink.py:318-336). Here the default path is a pure column
-expression (`F.zip_with` + `F.aggregate`) that stays JVM-side; a pandas UDF
-variant exists for wide fan-out scoring where one Arrow batch amortizes
-better. Both are deterministic (sequential element order).
+Python loops (xlink.py:318-336). Two forms live here:
+
+* Column expressions (``dot``, ``norm``, ``cosine``): a sequential
+  ``F.zip_with`` + ``F.aggregate`` fold that stays JVM-side. They serve the
+  per-candidate cosines whose vectors are already on the candidate row
+  (the entity-context pool, the no-prob pass), and ``cosine`` is the
+  reference the numpy kernels are tested against.
+* numpy kernels (``collect_vectors``, ``unit_rows``, ``pool_unit``,
+  ``list_matrix``) for the word-context vectors, run once per Arrow batch
+  by ``operators.scoring``. The rule they serve: vectors cross between the
+  JVM and Python once per MENTION, plus one broadcast per vector table,
+  never once per candidate. On the 4-core flagship benchmark, moving this
+  work off its JVM form (64 per-dimension SUMs per mention, then one
+  interpreted ``zip_with`` dot per candidate) cut the median call from
+  23.4 to 17.9 s (10 interleaved pairs, every pair faster); a prototype
+  that carried one vector per candidate across instead lost task CPU in
+  3 of 4 runs.
+
+The kernels sum in a different order than the sequential column fold, so
+results agree with ``cosine`` to the last few ulps, not bit for bit.
+Equal inputs always give bit-equal outputs: the row-wise ``einsum`` runs
+the same arithmetic on every row, which the top-1 tie-break on
+``entity_id`` relies on (a BLAS ``@`` may pick kernels per block).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType
 
 
 def _col(c: Column | str) -> Column:
@@ -45,137 +63,70 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot(a, b) / (na * nb))
 
 
-@pandas_udf(DoubleType())
-def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched cosine for wide scoring joins.
-
-    Used when each batch carries many (entity_vec, ctx_vec) pairs of the same
-    dimension — one vectorized numpy matmul per Arrow batch instead of one
-    `aggregate` expression per row. Rows with nulls or zero norms score 0.
-    """
-    out = np.zeros(len(a), dtype=np.float64)
-    mask = a.notna() & b.notna()
-    if mask.any():
-        av = np.stack(a[mask].to_numpy())
-        bv = np.stack(b[mask].to_numpy())
-        num = np.einsum("ij,ij->i", av, bv)
-        den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(den > 0, num / den, 0.0)
-        out[mask.to_numpy()] = sims
-    return pd.Series(out)
-
-
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Dot product as a flat codegen expression (known dimension).
-
-    Unlike zip_with+aggregate (which allocates an intermediate array and
-    folds with boxed doubles per row), this expands to ``dim`` primitive
-    multiply-adds inside whole-stage codegen — zero allocation per row.
-    The difference is decisive on 10^7+-row scoring stages.
-    """
-    ca, cb = _col(a), _col(b)
-    out = None
-    for i in range(dim):
-        term = F.element_at(ca, i + 1).cast("double") * F.element_at(cb, i + 1).cast("double")
-        out = term if out is None else out + term
-    return out
-
-
-def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Cosine with known dimension — flat codegen, zero-norm ⇒ 0.0."""
-    na = F.sqrt(dot_fixed(a, a, dim))
-    nb = F.sqrt(dot_fixed(b, b, dim))
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
-        dot_fixed(a, b, dim) / (na * nb)
-    )
-
-
-def unit_fixed(a: Column | str, dim: int) -> Column:
-    """Unit-normalize an array column (known dim); zero vector ⇒ null."""
-    ca = _col(a)
-    nrm = F.sqrt(dot_fixed(ca, ca, dim))
-    return F.when(
-        nrm > 0,
-        F.array(*[F.element_at(ca, i + 1).cast("double") / nrm for i in range(dim)]),
-    )
-
-
 def infer_dim(df, vec_col: str = "vec") -> int | None:
     """Vector dimension from the first row (None on empty input)."""
     row = df.select(F.size(_col(vec_col)).alias("d")).first()
     return row["d"] if row else None
 
 
-def make_entity_sim_udf(spark, entity_emb, key_col: str = "key", vec_col: str = "vec"):
-    """Factory: pandas UDF computing cosine(entity_vec[entity_id], ctx_vec).
+def collect_vectors(df):
+    """(keys, matrix) of a (key, vec) table, collected once by ``toArrow``.
 
-    The entity table is collected and broadcast as a {id: np.float32[dim]}
-    dict (bounded by the KB — for KBs beyond broadcast size use the
-    JVM-expression path instead). Per Arrow batch: one vectorized einsum
-    over the batch's stacked context vectors against the looked-up entity
-    rows — no JVM garbage, no per-row Python.
-
-    Null ctx or unknown entity ⇒ 0.0 (matches the empty-context word-sim
-    convention, xlink.py:319).
+    ``keys`` is a pyarrow string array (the value set for
+    ``pyarrow.compute.index_in``), ``matrix`` the float64 rows in key
+    order. Rows with a null vector are left out. Keys are expected to be
+    unique: a lookup finds the first row of a repeated key. Raises
+    ValueError when the vectors do not share one dimension.
     """
-    rows = entity_emb.select(key_col, vec_col).collect()
-    emb = {r[key_col]: np.asarray(r[vec_col], dtype=np.float32) for r in rows}
-    dim = len(next(iter(emb.values()))) if emb else 0
-    bc = spark.sparkContext.broadcast(emb)
-
-    @pandas_udf(DoubleType())
-    def entity_ctx_sim(entity_id: pd.Series, ctx: pd.Series) -> pd.Series:
-        d = bc.value
-        n = len(entity_id)
-        out = np.zeros(n, dtype=np.float64)
-        if n == 0 or dim == 0:
-            return pd.Series(out)
-        zero = np.zeros(dim, dtype=np.float32)
-        E = np.stack([d.get(e, zero) for e in entity_id])
-        mask = ctx.notna().to_numpy()
-        if mask.any():
-            C = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in ctx[mask]]
-            )
-            Em = E[mask].astype(np.float64)
-            num = np.einsum("ij,ij->i", Em, C)
-            den = np.linalg.norm(Em, axis=1) * np.linalg.norm(C, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out[mask] = np.where(den > 0, num / den, 0.0)
-        return pd.Series(out)
-
-    return entity_ctx_sim
+    t = df.select("key", "vec").where(F.col("vec").isNotNull()).toArrow()
+    keys = t.column(0).combine_chunks()
+    flat = t.column(1).combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    n = len(keys)
+    dim = len(flat) // n if n else 0
+    if len(flat) != n * dim:
+        raise ValueError("vectors do not share one dimension")
+    return keys, flat.astype(np.float64).reshape(n, dim)
 
 
-@pandas_udf(ArrayType(DoubleType()))
-def mean_pool_udf(vecs: pd.Series) -> pd.Series:
-    """GROUPED_AGG-free mean pool: input is array<array<float>> per row.
-
-    Mean of a list of vectors; null/empty list → null (callers decide the
-    empty-context convention — sim=0 for words xlink.py:319 vs sim=1 for
-    entities on the has-prob path xlink.py:329).
-    """
-
-    def pool(v):
-        if v is None or len(v) == 0:
-            return None
-        return np.mean(np.stack(v), axis=0).astype(np.float64).tolist()
-
-    return vecs.map(pool)
+def unit_rows(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(unit rows, nonzero mask); zero-norm rows stay all-zero."""
+    nrm = np.sqrt(np.einsum("ij,ij->i", m, m))
+    ok = nrm > 0
+    out = np.zeros_like(m)
+    out[ok] = m[ok] / nrm[ok, None]
+    return out, ok
 
 
-def mean_pool_expr(vecs: Column | str) -> Column:
-    """JVM-side mean pool of an array<array<float>> column.
-
-    transpose-free: running elementwise sum via aggregate+zip_with, then
-    divide by count. Null/empty → null.
-    """
-    c = _col(vecs)
-    n = F.size(c)
-    summed = F.aggregate(
-        F.slice(c, 2, F.greatest(n - 1, F.lit(0))),
-        F.transform(F.element_at(c, 1), lambda x: x.cast("double")),
-        lambda acc, v: F.zip_with(acc, v, lambda x, y: x + y.cast("double")),
+def list_matrix(a: pa.ListArray, dim: int) -> np.ndarray:
+    """rows × dim float64 matrix of a list<double> column; null rows read
+    as zeros."""
+    m = np.zeros((len(a), dim))
+    m[a.is_valid().to_numpy(zero_copy_only=False)] = (
+        a.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
     )
-    return F.when(n > 0, F.transform(summed, lambda x: x / n)).otherwise(F.lit(None))
+    return m
+
+
+def pool_unit(words: pa.ListArray, keys: pa.Array, mat: np.ndarray) -> pa.ListArray:
+    """Unit-normalized sum of the in-vocabulary word vectors of each row.
+
+    ``words``: one list of tokens per row; ``keys``/``mat`` from
+    ``collect_vectors``. A row with no in-vocabulary word, or whose vectors
+    sum to zero, gets null. Vectors are added in word order
+    (``np.add.reduceat``); the mean's 1/n cancels in the normalization.
+    """
+    n = len(words)
+    idx = pc.index_in(words.flatten(), value_set=keys)
+    lens = pc.fill_null(pc.list_value_length(words), 0).to_numpy()
+    row = np.repeat(np.arange(n), lens)[idx.is_valid().to_numpy(zero_copy_only=False)]
+    sums = np.zeros((n, mat.shape[1]))
+    if len(row):
+        starts = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
+        sums[row[starts]] = np.add.reduceat(mat[idx.drop_null().to_numpy()], starts, axis=0)
+    unit, ok = unit_rows(sums)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(ok * mat.shape[1], out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(unit[ok].ravel()), mask=pa.array(~ok)
+    )
+

@@ -2732,12 +2732,12 @@ def vector_blocking_pairs(
         # Default False keeps plan construction action-free.
         vec = vec.localCheckpoint(eager=True)
     spark = records.sparkSession
-    # the plane-sum and verify exchanges are CPU-dense on tiny bytes
-    # (``planes`` multiply-accumulates per vector row; one dot product per
-    # candidate) — size them explicitly (REPARTITION_BY_NUM is exempt from
-    # AQE coalescing, which was measured collapsing both to ONE task; the
-    # downstream aggregations reuse the pinned hash partitioning, so no
-    # exchange is added)
+    # the plane-sum exchange is CPU-dense on tiny bytes (``planes``
+    # multiply-accumulates per vector row) — size it explicitly
+    # (REPARTITION_BY_NUM is exempt from AQE coalescing, which was measured
+    # collapsing it to ONE task; the groupBy reuses the pinned hash
+    # partitioning, so no exchange is added). The verify groupBy below is
+    # not pinned: AQE sizes that exchange.
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     signs = spark.range(dim).select(
         F.col("id").alias("d"),

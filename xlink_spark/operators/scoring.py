@@ -10,8 +10,20 @@ is a DataFrame transform over the exploded (mention × candidate) table:
             └─ candidates ⋈ e_given_m ⋈ entity_embeddings
                      └─ believe fusion (C9/C10) → gates (F6-F8) → top-1 (W4)
 
-Cosines are JVM-side column expressions (functions.vectors.cosine) — the
-whole scoring stage is one shuffle-free projection after the joins.
+Where the vector math runs — once per mention, never once per candidate:
+
+  * the context-word pool (A7) and the candidate word cosine are numpy
+    kernels (functions.vectors), each one map-side Arrow pass over MENTION
+    rows; a mention's ctx_vec crosses into Python once, the word and
+    entity tables once each as a broadcast. Against their JVM form (64
+    per-dimension SUMs, then one interpreted zip_with dot per candidate)
+    the 4-core flagship benchmark call went from 23.4 to 17.9 s median
+    wall and from 38.6 to 29.0 task-CPU-s (10 interleaved pairs). A
+    variant that carried one vector per CANDIDATE into Python lost task
+    CPU, so the per-candidate cosines whose vectors sit on the candidate
+    row (the entity-context pool, the no-prob pass) stay JVM column
+    expressions (functions.vectors.cosine);
+  * fusion, gates and top-1 are pure JVM (a pinned plan property).
 
 Semantic pins (tests hold these):
   * empty context words ⇒ word_sim = 0            (xlink.py:319)
@@ -34,17 +46,25 @@ Semantic pins (tests hold these):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from xlink_spark.config import PredictorConfig
+from xlink_spark.functions import vectors
 from xlink_spark.functions.text import tokens_lower
 from xlink_spark.functions.vectors import (
+    collect_vectors,
     cosine,
     dot,
     infer_dim,
-    make_entity_sim_udf,
-    mean_pool_expr,
+    list_matrix,
+    pool_unit,
+    unit_rows,
 )
 
 
@@ -94,93 +114,69 @@ def attach_context(
     )
 
 
+def _broadcast_vectors(df: DataFrame, unit: bool = False):
+    """Broadcast ``(keys, float64 matrix)`` of a (key, vec) table,
+    collected once; ``unit`` normalizes the rows (zero-norm rows stay
+    zero). Both vector tables are KB-bounded, the bound under which the
+    JVM already broadcast them."""
+    # the Arrow passes call the kernels of functions.vectors; ship that
+    # module's functions by value, since executors may not have
+    # xlink_spark on their import path
+    cloudpickle.register_pickle_by_value(vectors)
+    keys, mat = collect_vectors(df)
+    if unit:
+        mat = unit_rows(mat)[0]
+    return df.sparkSession.sparkContext.broadcast((keys, mat))
+
+
 def context_word_vector(
     mentions_ctx: DataFrame, word_emb: DataFrame, tokenizer: str = "ws"
 ) -> DataFrame:
-    """A7: mean-pool of in-vocabulary context-word vectors per mention.
+    """A7: unit-normalized mean of the in-vocabulary context-word vectors.
 
     ``tokenizer``: "ws" = whitespace tokens (en path, WordParser.py:81-83);
     "cjk" = CJK chars as single tokens + non-CJK runs (the zh fallback —
     the reference segments zh context with jieba, WordParser.py:76-79; the
-    char-unigram degradation keeps the path JVM-side and matches C7's
+    char-unigram degradation keeps tokenization JVM-side and matches C7's
     jieba-less behavior).
 
-    Explode tokens (OUTER — empty-context mentions keep one null-word row)
-    → broadcast LEFT-join the word table (acts as the vocab filter,
-    xlink.py:124-127) → mean pool. Null ``ctx_vec`` means empty context.
+    The tokens are JVM expressions; the pool is one map-side Arrow pass
+    over the mention rows (``functions.vectors.pool_unit``): vocabulary
+    lookup by ``pyarrow.compute.index_in`` against the broadcast word
+    table (the vocab filter, xlink.py:124-127), per-mention sums by
+    ``np.add.reduceat``, unit normalization (the mean's 1/n cancels). Each
+    mention crosses into Python once, as its token list; no vector
+    crosses in. ``ctx_vec`` is null when the context has no
+    in-vocabulary word or its vectors sum to zero (word_sim 0,
+    xlink.py:319). Output: the input columns less ``ctx_prev`` and
+    ``ctx_after``, plus ``ctx_vec``.
 
-    Single-pass shape: the mention's other columns ride THROUGH the
-    aggregation (first() per group) instead of being joined back — the
-    naive pool-then-join-back formulation consumes ``mentions_ctx`` twice,
-    recomputing the whole upstream mention derivation (detection, conflict
-    windows) once per branch, and adds a mention-keyed shuffle join.
-    Measured on the flagship: 7.3s → 3.4s for this stage at sf0.1.
-
-    The pool is computed as ``dim`` per-dimension SUM aggregates (one hash
-    aggregate, fully whole-stage-codegen) rather than collect_list + a
-    higher-order fold — the interpreted lambda over millions of boxed
-    doubles was the pipeline's hottest CPU path.
+    Why numpy: in a traced 4-core flagship benchmark run this stage takes
+    3.0 s wall and 3.0 task-CPU-s; its JVM form (a token explode, a
+    broadcast join on the word, 64 per-dimension SUM aggregates with a
+    ``first()`` carry) took 7.5 s and 10.4 task-CPU-s.
     """
     from xlink_spark.functions.text import tokens_lower_cjk
 
     tok_fn = tokens_lower_cjk if tokenizer == "cjk" else tokens_lower
-    dim_row = word_emb.select(F.size("vec").alias("d")).first()
-    dim = dim_row["d"] if dim_row else 0
-    carry = [c for c in mentions_ctx.columns if c not in (*MENTION_KEY, "ctx_prev", "ctx_after")]
-    toks = mentions_ctx.select(
-        *MENTION_KEY,
-        *carry,
-        F.explode_outer(
-            F.concat(
-                tok_fn("ctx_prev"),
-                tok_fn("ctx_after"),
+    vocab = _broadcast_vectors(word_emb)
+    rows = mentions_ctx.select(
+        *[c for c in mentions_ctx.columns if c not in ("ctx_prev", "ctx_after")],
+        F.concat(tok_fn("ctx_prev"), tok_fn("ctx_after")).alias("_words"),
+    )
+    schema = StructType(
+        rows.schema.fields[:-1] + [StructField("ctx_vec", ArrayType(DoubleType()))]
+    )
+
+    def pool(batches):
+        keys, mat = vocab.value
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns[:-1], pool_unit(b.column(b.num_columns - 1), keys, mat)],
+                names=schema.names,
             )
-        ).alias("word"),
-    )
-    vecs = toks.join(
-        F.broadcast(word_emb.withColumnRenamed("key", "word")), "word", "left"
-    )
-    if dim:
-        sums = [
-            F.sum(F.element_at("vec", d + 1).cast("double")).alias(f"_s{d}")
-            for d in range(dim)
-        ]
-        pooled = vecs.groupBy(*MENTION_KEY).agg(
-            *[F.first(c).alias(c) for c in carry],
-            *sums,
-        )
-        # UNIT-normalized context vector (the /n mean cancels in the norm):
-        # downstream cosine collapses to a single dot product per candidate.
-        # The norm is materialized as its own column FIRST — inlining a
-        # 64-term norm into each of 64 array elements builds a >64KB codegen
-        # method that silently falls back to interpreted evaluation.
-        # Empty-context mentions have all-null sums ⇒ null norm ⇒ null
-        # ctx_vec, the same contract the join-back produced.
-        pooled = pooled.withColumn(
-            "_nrm",
-            F.sqrt(sum(F.col(f"_s{d}") * F.col(f"_s{d}") for d in range(dim))),
-        )
-        return pooled.select(
-            *MENTION_KEY,
-            *carry,
-            "_nrm",
-            F.array(*[F.col(f"_s{d}") for d in range(dim)]).alias("_arr"),
-        ).select(
-            *MENTION_KEY,
-            *carry,
-            F.when(
-                F.col("_nrm") > 0,
-                F.transform("_arr", lambda x: x / F.col("_nrm")),
-            ).alias("ctx_vec"),
-        )
-    # empty vocabulary — no mention gets a context vector
-    pooled = vecs.groupBy(*MENTION_KEY).agg(
-        *[F.first(c).alias(c) for c in carry],
-        F.collect_list("vec").alias("vecs"),
-    )
-    return pooled.select(
-        *MENTION_KEY, *carry, mean_pool_expr("vecs").alias("ctx_vec")
-    )
+
+    return rows.mapInArrow(pool, schema)
 
 
 def candidate_table(
@@ -189,79 +185,84 @@ def candidate_table(
     e_given_m: DataFrame,
     entity_emb: DataFrame,
     broadcast_dict: bool = True,
-    udf_scoring: bool = False,
 ) -> DataFrame:
-    """Explode mention × candidate with prior + embedding columns.
+    """Explode mention × candidate with the prior ``p`` and ``ctx_word_sim``.
 
-    F6/F4 at predict time: candidates without an embedding are dropped
-    (inner join), as are candidates absent from e_given_m (xlink.py:196-206,
-    Predictor.py:117-126).
+    F6/F4 at predict time: candidates without an embedding are dropped,
+    as are candidates absent from e_given_m (xlink.py:196-206,
+    Predictor.py:117-126). Repeated (mention, entity) dictionary rows keep
+    their multiplicity. A mention without candidates emits no rows.
+    ``mentions`` carries ``ctx_vec`` from ``context_word_vector``; without
+    the column every context counts as empty (word_sim 0). Output: the
+    mention columns less the context strings and ``ctx_vec``, plus
+    ``mention``, ``entity_id``, ``p`` and ``ctx_word_sim``.
 
-    Scale shape: the entity-embedding side is broadcast (bounded by the KB),
-    so the exploded candidate rows never shuffle their vectors — the only
-    wide column that moves in a shuffle is one ctx_vec per MENTION, never
-    per candidate. Context columns (ctx_prev/ctx_after) are dropped here;
-    they have served their purpose upstream.
+    Shape: the dictionary is grouped to one (entity_id, p) list per
+    surface and joined to the mentions, so each mention row — with its
+    ``ctx_vec`` — crosses into Python ONCE. One Arrow pass then explodes
+    the list and scores every candidate against the broadcast entity unit
+    matrix with a row-wise ``einsum`` (equal vectors give bit-equal sims,
+    which the top-1 tie-break on entity_id needs). No vector crosses per
+    candidate: a variant that carried the entity vector on each candidate
+    row into an Arrow cosine lost task CPU in 3 of 4 benchmark runs. In a
+    traced 4-core flagship benchmark run this stage takes 2.7 s wall and
+    2.7 task-CPU-s; its JVM form (broadcast entity joins and one
+    interpreted ``zip_with`` dot per candidate) took 3.8 s and 6.7.
+
+    Regimes: the dictionary tables are KB-bounded and broadcast by the JVM
+    (``broadcast_dict``), so the explosion never shuffles detected
+    mentions by surface — the surface key is Zipf-skewed and a sort-merge
+    join on it collapses to a handful of hot reducers. When the dictionary
+    outgrows broadcast, ``broadcast_dict=False`` keeps every dictionary
+    join distributed (pre-salt with detect.candidate_join); the dictionary
+    is never collected, and the same kernel runs.
     """
-    narrow = mentions.drop("ctx_prev", "ctx_after")
-    # Dictionary tables are KB-bounded: broadcast them so the candidate
-    # explosion never shuffles detected mentions by surface — the surface
-    # key is Zipf-skewed (few distinct heads carry most rows) and a
-    # sort-merge join on it collapses to a handful of hot reducers. When
-    # the dictionary outgrows broadcast (huge KBs), set
-    # broadcast_dict=False and pre-salt with detect.candidate_join instead.
     maybe_b = F.broadcast if broadcast_dict else (lambda df: df)
-    cands = narrow.withColumn("mention", F.lower("surface")).join(
-        maybe_b(mention_anchors.select("mention", "entity_id")), "mention", "inner"
+    ents = _broadcast_vectors(entity_emb, unit=True)
+    cand_lists = (
+        mention_anchors.select("mention", "entity_id")
+        .join(maybe_b(e_given_m.select("mention", "entity_id", "p")), ["mention", "entity_id"])
+        .groupBy("mention")
+        .agg(F.collect_list(F.struct("entity_id", "p")).alias("_cands"))
     )
-    cands = cands.join(maybe_b(e_given_m), ["mention", "entity_id"], "inner")
-    cands = cands.join(
-        F.broadcast(
-            entity_emb.select(
-                F.col("key").alias("entity_id"), F.col("vec").alias("entity_vec")
-            )
-        ),
-        "entity_id",
-        "inner",
+    narrow = mentions.drop("ctx_prev", "ctx_after")
+    if "ctx_vec" not in narrow.columns:
+        narrow = narrow.withColumn("ctx_vec", F.lit(None).cast("array<double>"))
+    rows = narrow.withColumn("mention", F.lower("surface")).join(
+        maybe_b(cand_lists), "mention", "inner"
     )
-    if "ctx_vec" in cands.columns:
-        # score the word-context cosine HERE, while both vectors are live in
-        # this stage, then drop BOTH vectors: downstream consumers re-attach
-        # entity vectors by broadcast, so candidate rows stay ~narrow-row
-        # sized through every shuffle, sort, and cache.
-        if udf_scoring:
-            sim_udf = make_entity_sim_udf(
-                mentions.sparkSession, entity_emb, key_col="key", vec_col="vec"
+    carry = [f for f in rows.schema.fields if f.name not in ("ctx_vec", "_cands")]
+    schema = StructType(
+        carry
+        + rows.schema["_cands"].dataType.elementType.fields
+        + [StructField("ctx_word_sim", DoubleType())]
+    )
+    carry_names = [f.name for f in carry]
+
+    def explode_scored(batches):
+        keys, unit = ents.value
+        for b in batches:
+            cands = b.column("_cands").flatten()
+            eid = pc.index_in(cands.field("entity_id"), value_set=keys)
+            hit = eid.is_valid()
+            row = np.repeat(
+                np.arange(b.num_rows), pc.list_value_length(b.column("_cands")).to_numpy()
+            )[hit.to_numpy(zero_copy_only=False)]
+            if not len(row):
+                continue
+            ctx = list_matrix(b.column("ctx_vec"), unit.shape[1])
+            sim = np.einsum("ij,ij->i", unit[eid.drop_null().to_numpy()], ctx[row])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *b.select(carry_names).take(pa.array(row)).columns,
+                    cands.field("entity_id").filter(hit),
+                    cands.field("p").filter(hit),
+                    pa.array(sim),
+                ],
+                names=schema.names,
             )
-            cands = cands.withColumn(
-                "ctx_word_sim", sim_udf(F.col("entity_id"), F.col("ctx_vec"))
-            ).drop("ctx_vec", "entity_vec")
-        else:
-            dim = infer_dim(entity_emb, "vec")
-            if dim:
-                # ctx_vec arrives unit-normalized from context_word_vector;
-                # normalize the entity side once (broadcast) → ONE dot per
-                # candidate (cosine needs 3 array folds; a fully-unrolled
-                # dot_fixed exceeds the JIT's huge-method limit and drops to
-                # the bytecode interpreter — measured 2.7x slower)
-                cands = cands.join(
-                    F.broadcast(_unit_entity_emb(entity_emb, dim)), "entity_id", "left"
-                )
-                sim = F.when(
-                    F.col("ctx_vec").isNull() | F.col("entity_unit").isNull(),
-                    F.lit(0.0),
-                ).otherwise(dot("entity_unit", "ctx_vec"))
-                cands = cands.withColumn("ctx_word_sim", sim).drop(
-                    "ctx_vec", "entity_vec", "entity_unit"
-                )
-            else:
-                cands = cands.withColumn(
-                    "ctx_word_sim",
-                    F.when(F.col("ctx_vec").isNull(), F.lit(0.0)).otherwise(
-                        cosine("entity_vec", "ctx_vec")
-                    ),
-                ).drop("ctx_vec", "entity_vec")
-    return cands
+
+    return rows.mapInArrow(explode_scored, schema)
 
 
 def _ensure_word_sim(candidates: DataFrame) -> DataFrame:
@@ -513,9 +514,10 @@ def context_entity_vector(
         # at-scale path: candidates shuffle NARROW (no vectors). Pool vector
         # is UNIT-normalized once per mention (the /cnt mean cancels), the
         # entity side once per entity (broadcast) — per-candidate cosine is
-        # a single compact dot product. (An Arrow-batched UDF variant —
-        # make_entity_sim_udf — measured FASTER at low core counts but
-        # regressed under JVM+Python oversubscription at local[32].)
+        # a single compact dot product. (Arrow-batched per-candidate
+        # variants measured faster at low core counts but regressed under
+        # JVM+Python oversubscription at local[32], and lost task CPU on
+        # the 4-core benchmark.)
         dim = infer_dim(entity_emb, "vec")
         from xlink_spark.functions.vectors import norm as vnorm
 
